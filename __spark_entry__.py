@@ -86,7 +86,7 @@ def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
     The (hi, lo) split and the canonical form are pure arithmetic on the
     parsed 128-bit value — precomputing them driver-side gives DuckDB
     (which has no 128-bit key primitive) an exact mirror of the Spark-side
-    ipv6_parts / ipv6_canonical_from_key derivation. mapped_u32 is non-null
+    ipv6_to_key / ipv6_canonical_from_key derivation. mapped_u32 is non-null
     iff the parsed BYTES are ::ffff:a.b.c.d (any textual spelling) — those
     rows take the v4 leg with the dotted quad as canonical ip, mirroring
     Java's convertFromIPv4MappedAddress and ipkeys.ipv4_mapped_u32. The

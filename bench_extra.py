@@ -41,8 +41,7 @@ def components(spark, sf_dir: str, scale_factor: int, workdir: str):
                                                        sessions, similarity,
                                                        stats, temporal,
                                                        text_ops, trending, web)
-    from logstash_filter_geoip_spark.operators.enrich import (enrich,
-                                                              enrich_via_distinct)
+    from logstash_filter_geoip_spark.operators.enrich import enrich
     from logstash_filter_geoip_spark.operators.route import route
     from logstash_filter_geoip_spark.sources.geolite2 import (load_dim,
                                                               vendored_dims)
@@ -392,12 +391,6 @@ def components(spark, sf_dir: str, scale_factor: int, workdir: str):
     add("hygiene.contrastive_triplets",
         lambda: clustering.contrastive_triplets(emb()).agg(
             F.count(F.lit(1)), F.sum("neg_dist2")).collect())
-
-    # ----- enrich variants -----
-    add("extra.enrich_via_distinct", lambda: agg.turns_per_geo_window(
-        enrich_via_distinct(parse_transcripts(transcripts()), dim, cfg,
-                            dim_v6=dim_v6),
-        "geoip.geo.country_iso_code").collect())
 
     return C
 

@@ -4,18 +4,13 @@ from transcript text (SURVEY.md §2.4 F10; mandated by BASELINE.json north_star)
 The reference takes the IP from an existing event field and uses the FIRST
 element when that field is a list (GeoIPFilter.java:156-163); our parse stage
 generalizes that: the first IPv4 literal found in `text` wins. Everything is
-built-in `regexp_extract_all` (JVM-side, whole-stage codegen); a pandas-UDF
-variant is provided for richer Python-regex needs and benchmarked against it.
+built-in `regexp_extract_all` (JVM-side, whole-stage codegen) — no Python.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Keep these in sync with oracle SQL in __spark_entry__.py (DuckDB uses RE2,
 # Spark uses Java regex — the subset below is common to both; RE2 has no
@@ -87,35 +82,3 @@ def parse_transcripts(df: DataFrame, text_col: str = "text") -> DataFrame:
           .withColumn("error_code", F.when(t.contains("E"), first_error_code(t)))
           .withColumn("tool_mention", first_tool_mention(t))
     )
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized variant (allowed UDF family #1, SURVEY.md §2.8) — used when
-# Python-regex features are needed; semantics identical for the common subset.
-# ---------------------------------------------------------------------------
-
-_IPV4_C = re.compile(IPV4_RE)
-_ERR_C = re.compile(ERROR_CODE_RE)
-_TOOL_C = re.compile(TOOL_RE)
-
-
-@F.pandas_udf(T.StructType([
-    T.StructField("ip_str", T.StringType()),
-    T.StructField("error_code", T.StringType()),
-    T.StructField("tool_mention", T.StringType()),
-]))
-def extract_entities(text: pd.Series) -> pd.DataFrame:
-    """Vectorized (Arrow batch) extraction over pd.Series — no per-row Python
-    at the Spark API level; the regex scan runs batch-at-a-time in the worker.
-    """
-    def first(pattern, v):
-        if not isinstance(v, str):
-            return None
-        m = pattern.search(v)
-        return m.group(1) if m else None
-
-    return pd.DataFrame({
-        "ip_str": text.map(lambda v: first(_IPV4_C, v)),
-        "error_code": text.map(lambda v: first(_ERR_C, v)),
-        "tool_mention": text.map(lambda v: first(_TOOL_C, v)),
-    })

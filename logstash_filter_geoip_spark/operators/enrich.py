@@ -10,11 +10,15 @@ Execution shape (SURVEY.md §2.3 J1/J2, §4.2):
     tests/test_plan_shape.py.
   * left-outer always: a turn never drops or duplicates (ranges disjoint).
   * the pipeline is Column expressions inside whole-stage-codegen spans,
-    with exactly ONE Arrow-vectorized node: the ipv6_to_key pandas UDF that
+    with exactly ONE Arrow-vectorized node: the v6 key UDF (ipv6_to_key, or
+    its LPM variant on the index leg — one parse routine behind both) that
     materializes the 128-bit (hi, lo) join key (a deliberate barrier — see
-    the inline note in enrich(); measured 30× cheaper than the pure-Column
+    the inline note in enrich(); measured 30× cheaper than a pure-Column
     parser, whose tree was re-inlined per downstream reference). No
     row-at-a-time Python anywhere.
+  * one enrich operator: the broadcast build side already holds the whole
+    dim in RAM on every executor, so it IS the reference's lookup cache
+    (geoip.rb:77-91); no separate memoizing path.
 
 Miss-semantics trichotomy (P1/P3/P5, spec/filters/geoip_offline_spec.rb):
   * no IP extracted / blank          → target struct NULL ("absent")
@@ -197,7 +201,7 @@ def prepare_dim_v6(dim_v6: DataFrame) -> DataFrame:
 
 
 def _index_dim_v6(dim_v6: DataFrame):
-    """Driver-side prep for the v6 ``index`` lookup mode: collect + sort the
+    """Driver-side prep for the v6 index leg: collect + sort the
     dim by (start_hi, start_lo), broadcast the numpy range arrays for the
     LPM UDF, and re-create the same rows WITH their sort index as the
     equi-join build side (one source of truth for the ordering — the UDF's
@@ -206,7 +210,7 @@ def _index_dim_v6(dim_v6: DataFrame):
     Driver-resident by design: the reference's workers each hold the whole
     .mmdb in RAM (GeoIPFilter.java:173-197); a full production GeoLite2 v6
     file is ~1.5M ranges ≈ ~50 MB of int64 arrays — the same order as the
-    broadcast the bucket mode already ships, minus the replication.
+    broadcast the bucket leg already ships, minus the replication.
 
     Memoized ON the dim object (r6): repeated enrich() calls against the
     SAME dim DataFrame (the vendored_dims mtime-cache returns one object
@@ -242,8 +246,7 @@ def _index_dim_v6(dim_v6: DataFrame):
 def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
            tags_col: str = "tags", dim_v6: DataFrame | None = None,
            source_may_contain_v6: bool = True,
-           event_time_col: str | None = None,
-           v6_lookup: str = "auto") -> DataFrame:
+           event_time_col: str | None = None) -> DataFrame:
     """Left-join `df` (with `config.source` IP string column) against the
     dimension table(s) and append the target struct + failure tags.
 
@@ -275,21 +278,21 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     contract (J2) is unchanged, as is the physical plan shape (the interval
     predicate is a residual on the same two broadcast-hash legs).
 
-    `v6_lookup` picks the v6 leg's physical strategy — both are ONE
-    BroadcastHashJoin + the ONE ArrowEvalPython barrier, value-identical:
-      * "index" (the `auto` default): the Arrow key UDF also binary-searches
-        the broadcast sorted range arrays (functions.ipkeys.ipv6_key_lpm_udf)
+    The v6 leg's physical strategy follows from `event_time_col` alone —
+    both are ONE BroadcastHashJoin + the ONE ArrowEvalPython barrier,
+    value-identical on disjoint dims (tests/test_v6_lookup_modes.py):
+      * index (no event time): the Arrow key UDF also binary-searches the
+        broadcast sorted range arrays (functions.ipkeys.ipv6_key_lpm_udf)
         and the join is an equi-join on the matched row index — probe cost
         O(log n) per v6 value, build side NOT bucket-replicated. The scale
         path: the bucketed join's probe cost is linear in rows-per-bucket,
         and real dims are bucket-skewed (the vendored test files already
         put 200–1,914 rows in one hi-word bucket; a full GeoLite2 is far
         denser).
-      * "bucket": hi-word /16 bucket equi-key + (hi, lo) range residual,
-        no driver-side collect of the dim. Required for event-time
-        (versioned) dims — their ranges overlap in IP space across
-        snapshots, so LPM-by-position is ill-defined; `auto` falls back to
-        it there, an explicit "index" raises.
+      * bucket (event time set): hi-word /16 bucket equi-key + (hi, lo)
+        range residual, no driver-side collect of the dim. Versioned dims
+        overlap in IP space across snapshots, so LPM-by-position is
+        ill-defined there.
     """
     if event_time_col is not None:
         if event_time_col not in df.columns:
@@ -299,17 +302,8 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
                 raise ValueError(
                     f"event_time_col requires valid_from/valid_to on {name} "
                     "— build the history with operators.temporal.dim_history")
-    if v6_lookup not in ("auto", "bucket", "index"):
-        raise ValueError(f"v6_lookup must be auto|bucket|index: {v6_lookup!r}")
-    if v6_lookup == "index" and event_time_col is not None:
-        raise ValueError(
-            "v6_lookup='index' is positional LPM over disjoint IP ranges; "
-            "versioned dims overlap in IP space across snapshots — use "
-            "'bucket' (the auto default for event-time enrichment)")
-    mode6 = None
-    if dim_v6 is not None:
-        mode6 = (("bucket" if event_time_col is not None else "index")
-                 if v6_lookup == "auto" else v6_lookup)
+    # the index leg whenever positional LPM is well-defined (see above)
+    lpm6 = dim_v6 is not None and event_time_col is None
 
     ip_col = _source_ip(df, config.source)
     existing_tags = (F.col(tags_col) if tags_col in df.columns else _empty_tags())
@@ -379,10 +373,10 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         # materialization barrier, so (hi, lo) are computed ONCE and every
         # downstream reference is a cheap long read. The gate ships only
         # ':'-containing values into Arrow (nulls for the v4 majority).
-        # Index mode swaps in the LPM variant of the SAME barrier: one
+        # The index leg swaps in the LPM variant of the SAME barrier: one
         # extra int64 column out of Arrow, the binary search riding the
         # pass the plan already pays for.
-        if mode6 == "index":
+        if lpm6:
             bc6, dim6_indexed = _index_dim_v6(dim_v6)
             key_udf = ipv6_key_lpm_udf(bc6)
         else:
@@ -402,13 +396,13 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
 
     dim_b = prepare_dim(dim)
 
-    if mode6 == "index":
+    if lpm6:
         # mapped rows get a NULL match index (null equi-key never matches
         # in the hash join) — the reference looks them up in the v4 trie
         # only, even when the v6 tree has a covering range
         probe = probe.withColumn(
             "__dim_idx", F.when(map4u.isNull(), F.col("__k6.dim_idx")))
-    elif mode6 == "bucket":
+    elif dim_v6 is not None:
         # mapped rows get a NULL v6 bucket (null equi-key never matches in
         # the hash join) — the reference looks them up in the v4 trie only
         probe = probe.withColumn(
@@ -446,7 +440,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     if dim_v6 is not None:
         hi, lo = F.col("__hi"), F.col("__lo")
         s_hi = F.col(_DIM6_PREFIX + "start_hi")
-        if mode6 == "index":
+        if lpm6:
             # the LPM already happened inside the Arrow barrier — pure
             # equi-join on the matched row position, residual-free
             cond6 = F.col("__dim_idx") == F.col("dim_idx6")
@@ -510,121 +504,6 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         F.col("__ip_u32").alias("ip_u32"),
         matched.alias("geoip_hit"),
     )
-
-
-def enrich_via_distinct(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
-                        tags_col: str = "tags",
-                        broadcast_ips: bool = False,
-                        dim_v6: DataFrame | None = None,
-                        event_time_col: str | None = None,
-                        v6_lookup: str = "auto") -> DataFrame:
-    """J3 — the set-oriented analogue of the reference's LRU lookup cache
-    (CHMCache, GeoIPFilter.java:87; semantics doc geoip.rb:77-91).
-
-    The cache memoizes decoded records per distinct IP; relationally that is:
-    distinct(extracted IPs) → enrich each ONCE → hash-join results back to
-    the turns. Semantically identical to enrich() because the lookup is a
-    pure function of the IP (asserted by tests). Worth it when the enrich
-    payload is expensive relative to a join probe (e.g. a pandas-UDF leg or
-    a very wide struct) and the IP column is heavily repeated; for the pure
-    codegen broadcast join the direct path usually wins — measure, don't
-    assume (bench.py reports `enrich_distinct_agg_sec` alongside the
-    headline `parse_enrich_agg` for exactly this comparison).
-
-    `broadcast_ips` defaults to False (r5): the distinct-IP relation is
-    DATA-SIZED in the worst case (high-cardinality sources at 100 TB have
-    ~as many distinct IPs as rows), so a forced broadcast is the same
-    failure class as the r4 dedup keep-list. Unhinted, AQE broadcasts from
-    measured runtime size exactly when the set actually is small; pass True
-    only when the IP cardinality is known-bounded.
-    """
-    if event_time_col is not None:
-        # the memoization key would have to become (ip, snapshot) — the
-        # distinct set regrows toward the row count and the cache analogy
-        # collapses; use the direct event-time path instead
-        raise ValueError(
-            "enrich_via_distinct memoizes per distinct IP; event-time "
-            "(versioned-dim) enrichment is a function of (ip, ts) — use "
-            "enrich(..., event_time_col=...) directly")
-    if not config.healthy:
-        # no lookup happens at all, so there is nothing to memoize — and the
-        # inner enrich would emit failure tags where the direct path emits
-        # the expired tag; delegate for identical semantics
-        return enrich(df, dim, config, tags_col=tags_col, dim_v6=dim_v6,
-                      v6_lookup=v6_lookup)
-
-    src = config.source
-    ips = df.where(F.col(src).isNotNull()).select(src).distinct()
-    # dim_v6 passes through so a family-agnostic source (ip_any — the
-    # pipeline default) enriches v6 rows identically to enrich(); without it
-    # every v6 IP was a silent guaranteed miss on this path (ADVICE r2).
-    # The diagnostics are renamed too: df may already carry ip_u32/geoip_hit
-    # from a prior enrich (chained City→ASN), which would otherwise make the
-    # post-join references ambiguous.
-    e = enrich(ips, dim, config, tags_col="__ip_tags", dim_v6=dim_v6,
-               v6_lookup=v6_lookup) \
-        .withColumnRenamed(src, "__ip_key") \
-        .withColumnRenamed(config.target, "__ip_target") \
-        .withColumnRenamed("ip_u32", "__ip_u32d") \
-        .withColumnRenamed("geoip_hit", "__ip_hit") \
-        .drop("__ip_tags")
-    if broadcast_ips:
-        e = F.broadcast(e)
-    joined = df.join(e, F.col(src) == F.col("__ip_key"), "left")
-
-    hit = F.coalesce(F.col("__ip_hit"), F.lit(False))
-    existing_tags = (F.col(tags_col) if tags_col in df.columns else _empty_tags())
-    fail_tags = F.array(*[F.lit(t) for t in config.tag_on_failure])
-    tags = F.when(~hit,
-                  F.array_union(F.coalesce(existing_tags, _empty_tags()), fail_tags)
-                  ).otherwise(F.coalesce(existing_tags, _empty_tags()))
-
-    # F9 merge parity with enrich(): the per-IP enrich struct is renamed
-    # before the join (so a pre-existing target never collides —
-    # AMBIGUOUS_REFERENCE in r1), then union-merged with the pre-existing
-    # struct leaf-by-leaf exactly like the direct path.
-    new_type = _target_type(config)
-    target = F.col("__ip_target")
-    if config.target in df.columns:
-        existing_type = df.schema[config.target].dataType
-        if not isinstance(existing_type, T.StructType):
-            raise ValueError(
-                f"target column {config.target!r} pre-exists with non-struct "
-                f"type {existing_type.simpleString()}; cannot merge")
-        absent = F.col(src).isNull() | (F.trim(F.col(src)) == "")
-        tree = _struct_to_tree(target, new_type,
-                               location_is_leaf=not config.ecs_compatibility)
-        merged = _merge_tree(tree, F.col(config.target), existing_type, absent)
-        target = _tree_to_struct(merged)
-
-    keep = [c for c in df.columns
-            if c not in (tags_col, config.target, "ip_u32", "geoip_hit")]
-    return joined.select(
-        *keep,
-        tags.alias(tags_col),
-        target.alias(config.target),
-        F.col("__ip_u32d").alias("ip_u32"),
-        hit.alias("geoip_hit"),
-    )
-
-
-def _struct_to_tree(col: Column, stype: T.StructType,
-                    location_is_leaf: bool = False) -> dict:
-    """Recursively unpack a struct Column into the {name: Column} tree shape
-    `_merge_tree` consumes. Legacy-mode `location` is an atomic {lat, lon}
-    composite (F3: present only when BOTH coordinates are) — kept as a leaf
-    so the merge coalesces it whole; in ECS mode geo.location is an ordinary
-    nested path and recursion keeps per-leaf struct shape identical to the
-    direct enrich() build (location struct of null leaves, never null)."""
-    tree: dict = {}
-    for f in stype.fields:
-        child = col[f.name]
-        if isinstance(f.dataType, T.StructType) \
-                and not (location_is_leaf and f.name == "location"):
-            tree[f.name] = _struct_to_tree(child, f.dataType, location_is_leaf)
-        else:
-            tree[f.name] = child
-    return tree
 
 
 def _merge_tree(tree: dict, existing: Column,

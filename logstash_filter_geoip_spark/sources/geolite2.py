@@ -513,8 +513,12 @@ def validate_dim_v6(df: DataFrame, max_span: int = MAX_V6_BUCKET_SPAN,
     for col in ("network", "start_hi", "start_lo", "end_hi", "end_lo"):
         if col not in df.columns:
             raise ValueError(f"v6 dimension table missing required column {col}")
+    # (hi, lo) pairs compare lexicographically; a NULL lo word or an
+    # inverted lo inside one hi word would miss silently on both v6 legs
     bad = df.where(
-        "start_hi IS NULL OR end_hi IS NULL OR start_hi > end_hi").count()
+        "start_hi IS NULL OR start_lo IS NULL OR end_hi IS NULL "
+        "OR end_lo IS NULL OR start_hi > end_hi "
+        "OR (start_hi = end_hi AND start_lo > end_lo)").count()
     if bad:
         raise ValueError(f"v6 dimension table has {bad} malformed range rows")
     rows = df.select("network", "start_hi", "end_hi").collect()

@@ -66,6 +66,22 @@ def test_malformed_v6_range_raises(spark):
         validate_dim_v6(df)
 
 
+def test_inverted_or_null_v6_lo_words_raise(spark):
+    """Ranges compare as (hi, lo) pairs: within one hi word an inverted lo,
+    and a NULL lo on either end, are malformed too — such rows would miss
+    silently on both v6 legs instead of failing at load."""
+    ok = _row_v6("2001:db8::/96", "XX", "OK", "Nowhere")  # start_hi == end_hi
+    assert ok[1] == ok[3] and ok[2] < ok[4]
+    validate_dim_v6(spark.createDataFrame([ok], SCHEMAS_V6["Country"]))
+    inverted_lo = (ok[0], ok[1], ok[4], ok[3], ok[2], *ok[5:])
+    null_start_lo = (ok[0], ok[1], None, ok[3], ok[4], *ok[5:])
+    null_end_lo = (ok[0], ok[1], ok[2], ok[3], None, *ok[5:])
+    for bad in (inverted_lo, null_start_lo, null_end_lo):
+        df = spark.createDataFrame([ok, bad], SCHEMAS_V6["Country"])
+        with pytest.raises(ValueError, match="has 1 malformed"):
+            validate_dim_v6(df)
+
+
 def test_mmdb_ingest_guard_bound():
     # every bundled public test database must ingest under the default bound
     from logstash_filter_geoip_spark.sources.geolite2 import mmdb_dim_rows

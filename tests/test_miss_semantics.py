@@ -222,3 +222,75 @@ def test_expired_database_preserves_existing_target(spark):
     fresh = enrich(df, dim, expired_cfg)
     assert fresh.columns == healthy.columns
     assert fresh.collect()[0]["geoip"] is None
+
+
+def test_expired_database_full_corpus(spark):
+    """The unhealthy path over the whole sf0.001 corpus: every row kept
+    (no lookup, no join) and tagged expired only, target absent, no hit."""
+    from logstash_filter_geoip_spark.sources.transcripts import \
+        load_transcripts
+    from tests.conftest import SF_SMOKE
+    parsed = parse_transcripts(load_transcripts(spark, SF_SMOKE))
+    cfg = GeoIPConfig(source="ip_str", target="geoip", database="City",
+                      healthy=False)
+    out = enrich(parsed, load_dim(spark, "City"), cfg)
+    assert out.count() == 1000
+    assert out.where(F.col("geoip").isNotNull() | F.col("geoip_hit")
+                     | (F.col("tags") != F.array(F.lit(EXPIRED)))).count() == 0
+
+
+def test_pre_existing_target_merge(spark):
+    """F9 (GeoIPFilter.java:214-232, CHANGELOG #98): a pre-existing target
+    struct merges leaf-by-leaf — fields enrich does not produce survive
+    (custom_note), a hit overwrites a shared leaf (ip), a miss or an absent
+    source leaves it as it was."""
+    from pyspark.sql import Row
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("ip_str", T.StringType()),
+        T.StructField("geoip", T.StructType([
+            T.StructField("custom_note", T.StringType()),
+            T.StructField("ip", T.StringType()),
+        ])),
+    ])
+    rows = [
+        ("hit", 0, "216.160.83.58", Row(custom_note="keep-me", ip="pre-ip")),
+        ("miss", 0, "0.0.0.0", Row(custom_note="keep-me", ip="pre-ip")),
+        ("absent", 0, None, Row(custom_note="keep-me", ip="pre-ip")),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    cfg = GeoIPConfig(source="ip_str", target="geoip", database="City")
+    out = {r["conv_id"]: r for r in
+           enrich(df, load_dim(spark, "City"), cfg).collect()}
+    for k in ("hit", "miss", "absent"):
+        assert out[k]["geoip"]["custom_note"] == "keep-me", k
+    assert out["hit"]["geoip"]["ip"] == "216.160.83.58"
+    assert out["hit"]["geoip"]["geo"]["city_name"] == "Milton"
+    assert out["hit"]["tags"] == []
+    assert out["miss"]["geoip"]["ip"] == "pre-ip"
+    assert out["absent"]["geoip"]["ip"] == "pre-ip"
+    assert out["miss"]["tags"] == [FAIL] and out["absent"]["tags"] == [FAIL]
+
+
+def test_chained_enrich_no_duplicate_columns(spark):
+    """The standard City-then-ASN stack must replace the diagnostic columns
+    (ip_u32, geoip_hit), not duplicate them, and keep both targets."""
+    from collections import Counter
+    from logstash_filter_geoip_spark.sources.transcripts import \
+        load_transcripts
+    from tests.conftest import SF_SMOKE
+    parsed = parse_transcripts(load_transcripts(spark, SF_SMOKE))
+    city = GeoIPConfig(source="ip_str", target="geoip", database="City")
+    asn = GeoIPConfig(source="ip_str", target="asn_info", database="ASN")
+    e1 = enrich(parsed, load_dim(spark, "City"), city)
+    e2 = enrich(e1, load_dim(spark, "ASN"), asn)
+    dupes = [c for c, k in Counter(e2.columns).items() if k > 1]
+    assert not dupes, dupes
+    # both targets populated for a row that hits both DBs
+    r = e2.where("ip_str = '216.160.83.58'").limit(1).collect()
+    if r:
+        assert r[0]["geoip"] is not None and r[0]["asn_info"] is not None
+    e2.write.format("noop").mode("overwrite").save()  # writable schema

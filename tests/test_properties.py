@@ -116,12 +116,14 @@ def test_random_ipv6_keys_batch(spark):
     assert [r["ip"] for r in by_int] == [r["ip"] for r in by_key]
 
 
-def test_ipv6_parts_fuzz_vs_ipaddress(spark):
-    """Adversarial colon-hex fuzz: the codegen ipv6_parts/key derivation must
-    agree with Python's ipaddress on EVERY string over the [0-9a-f:]
-    alphabet — valid or not (batch-random through one DataFrame, seeded)."""
+def test_ipv6_parts_fuzz_vs_ipaddress(spark, lpm_key_udf):
+    """Adversarial colon-hex fuzz: the key both enrich v6 legs parse —
+    ipv6_to_key (bucket leg, or no v6 dim) and the LPM UDF with an empty
+    index (index leg) — must agree with Python's ipaddress on EVERY string
+    over the [0-9a-f:.] alphabet, valid or not (batch-random through one
+    DataFrame, seeded)."""
     from pyspark.sql import functions as F
-    from logstash_filter_geoip_spark.functions.ipkeys import ipv6_key_cols
+    from logstash_filter_geoip_spark.functions.ipkeys import ipv6_to_key
 
     rng = random.Random(1337)
     # '.' in the alphabet: embedded-dotted-quad forms (VERDICT r3 #5) must
@@ -142,8 +144,8 @@ def test_ipv6_parts_fuzz_vs_ipaddress(spark):
               "1:2:3:4:5:6:7:1.2.3.4", "::ffff:1.2.3.4:5", "1.2.3.4",
               "0:0:0:0:0:0:1.2.3.4", ":1.2.3.4", "1.2.3.4::"]
     df = spark.createDataFrame([(c,) for c in cases], ["ip"])
-    hi, lo = ipv6_key_cols(F.col("ip"))
-    out = df.select("ip", hi.alias("hi"), lo.alias("lo")).collect()
+    out = df.select("ip", ipv6_to_key(F.col("ip")).alias("k"),
+                    lpm_key_udf(F.col("ip")).alias("m")).collect()
     mism = []
     for r in out:
         try:
@@ -152,9 +154,10 @@ def test_ipv6_parts_fuzz_vs_ipaddress(spark):
                     (n & (2**64 - 1)) - 2**63)
         except ValueError:
             want = (None, None)
-        got = (r["hi"], r["lo"])
-        if got != want:
-            mism.append((r["ip"], got, want))
+        for udf in ("k", "m"):
+            got = (r[udf]["ip_hi"], r[udf]["ip_lo"])
+            if got != want:
+                mism.append((udf, r["ip"], got, want))
     assert not mism, mism[:5]
 
 
